@@ -184,29 +184,7 @@ object Bench {
     // a concurrent process's files — drop right after its timed run,
     // OUTSIDE the timed region.
     val tmpRoot = java.nio.file.Paths.get("/root/repo/target/tmp")
-    try {
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      def protectedName(n: String): Boolean =
-        n.contains("-base-") || n.endsWith(".lock") ||
-          n == "gd-warehouse" || n == "golden"
-      if (java.nio.file.Files.isDirectory(tmpRoot)) {
-        val s = java.nio.file.Files.list(tmpRoot)
-        try s.iterator().asScala
-          .filter(p => !protectedName(p.getFileName.toString))
-          .filter { p =>
-            try java.nio.file.Files.getLastModifiedTime(p)
-              .toMillis < cutoff
-            catch { case _: Throwable => false }
-          }
-          .foreach { p =>
-            try java.nio.file.Files.walk(p)
-              .sorted(java.util.Comparator.reverseOrder())
-              .forEach(q => java.nio.file.Files.deleteIfExists(q))
-            catch { case _: Throwable => () }
-          }
-        finally s.close()
-      }
-    } catch { case _: Throwable => () } // hygiene is best-effort
+    graft.queries.ScratchDirs.sweepStale(tmpRoot)
     def timeQuery(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

@@ -40,7 +40,17 @@ case class AddFile(
     deletionVector: Option[DeletionVectorDescriptor] = None,
     baseRowId: Option[Long] = None,
     defaultRowCommitVersion: Option[Long] = None,
-    clusteringProvider: Option[String] = None)
+    clusteringProvider: Option[String] = None) {
+  /** The tombstone retiring this add. It carries the add's DV
+    * descriptor: replay dedups on (path, dvUniqueId), so a DV-less
+    * remove would never shadow a DV-carrying add.
+    */
+  private[delta] def toRemove(dataChange: Boolean = true): RemoveFile =
+    RemoveFile(path, Some(System.currentTimeMillis()), dataChange,
+      extendedFileMetadata = Some(true),
+      partitionValues = Some(partitionValues), size = Some(size),
+      deletionVector = deletionVector)
+}
 
 case class RemoveFile(
     path: String,

@@ -27,7 +27,16 @@ class ScanBuilder(snapshot: Snapshot) {
   def build(): DeltaScan = new DeltaScan(snapshot, predicateSql)
 }
 
-class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
+/** `partitionsIn` narrows the scan to files whose partition tuple is one
+  * of the given maps (keyed by PHYSICAL column name, exactly as add
+  * actions carry them), compared as a typed `In` over the parsed tuple.
+  */
+class DeltaScan private[delta] (val snapshot: Snapshot,
+    val predicateSql: Option[String],
+    partitionsIn: Option[Set[Map[String, String]]]) {
+  def this(snapshot: Snapshot, predicateSql: Option[String]) =
+    this(snapshot, predicateSql, None)
+
   private val spark = snapshot.spark
   private val partCols = snapshot.partitionColumns
   private val schema = snapshot.schema
@@ -81,6 +90,11 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
       PartitionValues.castExpr("add.partitionValues", physName(c),
         fieldType(c)).as(c)): _*)
 
+  /** [[pvStruct]]'s typed tuple for one physical-keyed value map. */
+  private def pvLiteral(pv: Map[String, String]): Column =
+    struct(partCols.map(c => PartitionValues.castValue(
+      lit(pv.getOrElse(physName(c), null)), fieldType(c)).as(c)): _*)
+
   /** Surviving add actions after partition pruning + stats skipping
     * (reference scan/data_skipping.rs; removes are never pruned —
     * pruning here runs on the post-replay live set, and per-file stats
@@ -90,7 +104,11 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
   lazy val filesDF: DataFrame = if (staticallyFalse) {
     spark.createDataFrame(
       java.util.Collections.emptyList[Row](), snapshot.addsSchema)
-  } else pruneAdds(snapshot.allAdds)
+  } else {
+    val pruned = pruneAdds(snapshot.allAdds)
+    partitionsIn.fold(pruned)(pvs =>
+      pruned.filter(pvStruct.isin(pvs.toSeq.map(pvLiteral): _*)))
+  }
 
   /** Apply this scan's partition pruning + stats skipping to an
     * arbitrary adds DataFrame (same shape as [[Snapshot.allAdds]]).

@@ -68,34 +68,97 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   // ---------------- commit machinery ----------------
 
-  /** Atomic put-if-absent commit with conflict resolution (reference
-    * committer/filesystem.rs + transaction/mod.rs:327-590). On losing
-    * the race at version v the WINNING commit is read and examined:
+  /** The one commit path (reference transaction/mod.rs:327-590 +
+    * committer/filesystem.rs): every `_delta_log/<version>.json` this
+    * library writes — version 0 included — is written here. Callers
+    * pass the read snapshot (None for version 0), the operation and its
+    * typed actions; everything derived from them lives here:
+    *  - the commitInfo, regenerated on every attempt with the handle's
+    *    correlation id and, when the resulting metadata enables
+    *    in-commit timestamps, an ICT strictly above the ACTUAL
+    *    predecessor's (commit_info.rs:484) — a rebase past a winner
+    *    keeps ICT monotonic. Enabling ICT mid-log also records the
+    *    enablement version + timestamp in the metadata (time travel
+    *    needs the boundary);
+    *  - row ids: on a row-tracking table every add without a baseRowId
+    *    takes a fresh range past the high-water mark and the commit
+    *    carries the advanced mark (row_tracking.rs:19-68);
+    *  - the rebase rule: txn app ids and Serializable isolation come
+    *    from the actions and metadata, and a commit carrying a
+    *    protocol, metadata or domain-metadata action is always
+    *    [[DeltaTable.Strict]] — those were derived from the read
+    *    snapshot and must never slide past a winner;
+    *  - the post-commit hooks: commit metrics, the `.crc` from the
+    *    actions' own sizes and P&M, auto-checkpoint and auto-compact.
+    * On losing the race at version v the WINNING commit is read:
     * protocol/metadata changes and same-appId transactions surface as
-    * typed conflicts regardless of retryability (a blind append must
-    * never skip over them — the staged data was validated against the
-    * old table definition); reads-based commits surface
-    * [[ConcurrentWriteException]]; blind appends rebase to the next
-    * version, REGENERATING the commit lines via `mkLines(v)` so the
-    * in-commit timestamp derives from the actual predecessor (the
-    * winning commit), keeping ICT strictly monotonic across retries.
+    * typed conflicts under every policy; then Strict fails, Reads
+    * rebases only past a provably disjoint winner, and Blind rebases
+    * past anything but (under Serializable isolation) a data removal.
     */
-  private[delta] def commitActions(startVersion: Long,
-      mkLines: Long => Seq[String], retryable: Boolean,
-      txnAppIds: Seq[String],
-      readCheck: Option[DeltaTable.ReadSet] = None,
-      serializable: Boolean = false): Long = {
+  private[delta] def commit(snap: Option[Snapshot], op: String,
+      params: Map[String, String] = Map.empty,
+      protocol: Option[Protocol] = None,
+      metadata: Option[graft.delta.Metadata] = None,
+      txns: Seq[SetTransaction] = Nil,
+      domains: Seq[DomainMetadata] = Nil,
+      removes: Seq[RemoveFile] = Nil,
+      adds: Seq[AddFile] = Nil,
+      cdc: Seq[AddCDCFile] = Nil,
+      policy: DeltaTable.ConflictPolicy = DeltaTable.Strict): Long = {
+    val meta = metadata.orElse(snap.map(_.metadata)).getOrElse(
+      throw new IllegalArgumentException("a version-0 commit needs metadata"))
+    val firstVersion = snap.fold(0L)(_.version + 1)
+    val (finalAdds, hwmDomain) = snap match {
+      case Some(s) if RowTracking.enabled(meta) &&
+          adds.exists(_.baseRowId.isEmpty) =>
+        val (assigned, hwm) = RowTracking.assign(adds,
+          RowTracking.highWaterMark(s), firstVersion)
+        (assigned, Seq(RowTracking.domainMetadataFor(hwm)))
+      case _ => (adds, Nil)
+    }
+    val effective =
+      if (protocol.isDefined || metadata.isDefined ||
+          domains.nonEmpty || hwmDomain.nonEmpty) DeltaTable.Strict
+      else policy
+    val ictOn = DeltaTable.ictEnabled(meta)
+    val enablingIct =
+      ictOn && snap.exists(s => !DeltaTable.ictEnabled(s.metadata))
+    val body = (txns.map(t => SingleAction(txn = Some(t))) ++
+      (domains ++ hwmDomain).map(d => SingleAction(domainMetadata = Some(d))) ++
+      removes.map(r => SingleAction(remove = Some(r))) ++
+      finalAdds.map(a => SingleAction(add = Some(a))) ++
+      cdc.map(c => SingleAction(cdc = Some(c)))).map(JsonLog.writeAction)
+    var committedMeta = metadata
+    def render(v: Long): String = {
+      val ts = now()
+      val ict =
+        if (ictOn) Some(math.max(ts, commitIct(v - 1).getOrElse(0L) + 1))
+        else None
+      if (enablingIct) committedMeta = metadata.map(m => m.copy(
+        configuration = m.configuration ++ Map(
+          DeltaTable.ICT_ENABLEMENT_VERSION_KEY -> v.toString,
+          DeltaTable.ICT_ENABLEMENT_TIMESTAMP_KEY -> ict.get.toString)))
+      ((Seq(SingleAction(commitInfo = Some(CommitInfo(ts, op, params,
+          Some(DeltaTable.ENGINE_INFO), ict, correlationId)))) ++
+        protocol.map(p => SingleAction(protocol = Some(p))) ++
+        committedMeta.map(m => SingleAction(metaData = Some(m))))
+        .map(JsonLog.writeAction) ++ body).mkString("", "\n", "\n")
+    }
+
     val opId = Metrics.newId()
     val t0 = Metrics.now()
-    var v = startVersion
+    var v = firstVersion
     var attempts = 0
     def fail(e: Exception): Nothing = {
       Metrics.report(MetricEvent.TransactionCommitFailure(opId,
         Metrics.now() - t0, v, attempts, e.getClass.getSimpleName))
       throw e
     }
-    while (true) {
-      val content = mkLines(v).mkString("", "\n", "\n")
+    if (snap.isEmpty) fs.mkdirs(logDir)
+    var committed = -1L
+    while (committed < 0) {
+      val content = render(v)
       committer.commit(fs, logDir, v, content) match {
         case CommitResponse.Committed(cv, _) =>
           // commit JSON bytes: the log-growth half of write-side I/O
@@ -105,92 +168,107 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
               1L, content.getBytes("UTF-8").length.toLong))
           Metrics.report(MetricEvent.TransactionCommitSuccess(opId,
             Metrics.now() - t0, cv, attempts))
-          return cv
-        case CommitResponse.Conflict(_) => ()
-      }
-      attempts += 1
-      val winner = Storage.readLines(fs, resolveCommitPath(v))
-        .filter(_.nonEmpty)
-      def winnerField(field: String) = winner.iterator
-        .filter(_.contains("\"" + field + "\""))
-        .map(JsonLog.parseLine)
-        .flatMap(n => Option(n.get(field)).filterNot(_.isNull))
-      if (winnerField("protocol").nonEmpty)
-        fail(new ProtocolChangedException(
-          s"concurrent protocol change at version $v for $pathStr"))
-      if (winnerField("metaData").nonEmpty)
-        fail(new MetadataChangedException(
-          s"concurrent metadata change at version $v for $pathStr"))
-      if (txnAppIds.nonEmpty) {
-        winnerField("txn").map(_.get("appId").asText)
-          .find(txnAppIds.contains)
-          .foreach(app => fail(new ConcurrentTransactionException(
-            s"concurrent transaction for appId '$app' at version $v " +
-              s"for $pathStr")))
-      }
-      if (attempts > 1000)
-        fail(new ConcurrentWriteException(
-          s"commit conflict at version $v for $pathStr (gave up)"))
-      readCheck match {
-        case Some(rs) =>
-          // delete/delete: the winner removed a file we also remove —
-          // both transactions acted on the same rows
-          winnerField("remove").map(RowCodec.jsonToRemove)
-            .map(r => Storage.canonicalPathKey(r.path))
-            .find(rs.removedKeys.contains)
-            .foreach(p => fail(new ConcurrentDeleteDeleteException(
-              s"concurrent removal of '$p' at version $v for $pathStr")))
-          // append check: winner adds are safe only when partition
-          // pruning + stats skipping PROVE no added file can hold a row
-          // matching our predicate (delta's Serializable check; the
-          // reference surfaces the same cases via CommitResult)
-          // dataChange=false adds (a concurrent OPTIMIZE/compaction)
-          // rewrite existing rows without changing table contents — the
-          // remove/remove check above already catches compactions that
-          // touched OUR files, so they never conflict with a predicate
-          // (delta-spark excludes them under WriteSerializable too)
-          val winAdds = winnerField("add").map(RowCodec.jsonToAdd)
-            .filter(_.dataChange).toSeq
-          if (winAdds.nonEmpty && !rs.maintenance) {
-            val disjoint = rs.predicateSql.isDefined && {
-              val rows: Seq[org.apache.spark.sql.Row] = winAdds.map(a =>
-                new org.apache.spark.sql.catalyst.expressions
-                  .GenericRowWithSchema(
-                    Array[Any](RowCodec.addToRow(a), v),
-                    rs.snap.addsSchema))
-              val df = spark.createDataFrame(
-                rows.asJava, rs.snap.addsSchema)
-              new DeltaScan(rs.snap, rs.predicateSql)
-                .pruneAdds(df).limit(1).count() == 0
-            }
-            if (!disjoint) fail(new ConcurrentAppendException(
-              s"concurrent append at version $v for $pathStr may match " +
-                s"the predicate ${rs.predicateSql.getOrElse("<none>")}"))
-          }
-          // provably disjoint winner → rebase past it
-        case None =>
-          if (!retryable) fail(new ConcurrentWriteException(
-            s"commit conflict at version $v for $pathStr"))
-          // Serializable isolation: a blind append may not slide past a
-          // commit that REMOVED data — serializing the append first
-          // would change which rows that delete saw
-          // (delta.isolationLevel; WriteSerializable keeps the default
-          // append-commutes-with-anything behavior)
-          if (serializable &&
-              winnerField("remove").exists(r =>
-                Option(r.get("dataChange")).forall(_.asBoolean)))
+          committed = cv
+        case CommitResponse.Conflict(_) =>
+          attempts += 1
+          if (snap.isEmpty)
+            fail(new IllegalStateException(s"table already exists at $pathStr"))
+          if (attempts > 1000)
             fail(new ConcurrentWriteException(
-              s"serializable isolation: concurrent data removal at " +
-                s"version $v for $pathStr"))
+              s"commit conflict at version $v for $pathStr (gave up)"))
+          checkWinner(v, snap.get, effective, txns.map(_.appId),
+            removes, fail)
+          v += 1
       }
-      v += 1
     }
-    v // unreachable
+    writeChecksum(committed, protocol, committedMeta,
+      finalAdds.map(_.size), removes.map(_.size.getOrElse(0L)))
+    val newMeta = committedMeta.getOrElse(meta)
+    maybeAutoCheckpoint(committed, newMeta)
+    val touched = finalAdds.filter(_.dataChange).map(_.partitionValues).toSet
+    if (snap.isDefined && touched.nonEmpty) maybeAutoCompact(newMeta, touched)
+    committed
   }
 
-  private[delta] def commitActions(startVersion: Long, actions: Seq[String],
-      retryable: Boolean): Long =
-    commitActions(startVersion, (_: Long) => actions, retryable, Nil)
+  /** Decide whether a commit that lost version `v` may rebase past the
+    * winner (returns) or must fail (calls `fail`). A blind append must
+    * never skip a protocol/metadata change — its staged data was
+    * validated against the old table definition.
+    */
+  private def checkWinner(v: Long, snap: Snapshot,
+      policy: DeltaTable.ConflictPolicy, txnAppIds: Seq[String],
+      removes: Seq[RemoveFile], fail: Exception => Nothing): Unit = {
+    val winner = Storage.readLines(fs, resolveCommitPath(v))
+      .filter(_.nonEmpty)
+    def winnerField(field: String) = winner.iterator
+      .filter(_.contains("\"" + field + "\""))
+      .map(JsonLog.parseLine)
+      .flatMap(n => Option(n.get(field)).filterNot(_.isNull))
+    if (winnerField("protocol").nonEmpty)
+      fail(new ProtocolChangedException(
+        s"concurrent protocol change at version $v for $pathStr"))
+    if (winnerField("metaData").nonEmpty)
+      fail(new MetadataChangedException(
+        s"concurrent metadata change at version $v for $pathStr"))
+    winnerField("txn").map(_.get("appId").asText)
+      .find(txnAppIds.contains)
+      .foreach(app => fail(new ConcurrentTransactionException(
+        s"concurrent transaction for appId '$app' at version $v " +
+          s"for $pathStr")))
+    policy match {
+      case DeltaTable.Strict =>
+        fail(new ConcurrentWriteException(
+          s"commit conflict at version $v for $pathStr"))
+      case DeltaTable.Reads(rs) =>
+        // delete/delete: the winner removed a file we also remove —
+        // both transactions acted on the same rows
+        val removedKeys =
+          removes.map(r => Storage.canonicalPathKey(r.path)).toSet
+        winnerField("remove").map(RowCodec.jsonToRemove)
+          .map(r => Storage.canonicalPathKey(r.path))
+          .find(removedKeys.contains)
+          .foreach(p => fail(new ConcurrentDeleteDeleteException(
+            s"concurrent removal of '$p' at version $v for $pathStr")))
+        // append check: winner adds are safe only when partition
+        // pruning + stats skipping PROVE no added file can hold a row
+        // matching our predicate (delta's Serializable check; the
+        // reference surfaces the same cases via CommitResult)
+        // dataChange=false adds (a concurrent OPTIMIZE/compaction)
+        // rewrite existing rows without changing table contents — the
+        // remove/remove check above already catches compactions that
+        // touched OUR files, so they never conflict with a predicate
+        // (delta-spark excludes them under WriteSerializable too)
+        val winAdds = winnerField("add").map(RowCodec.jsonToAdd)
+          .filter(_.dataChange).toSeq
+        if (winAdds.nonEmpty && !rs.maintenance) {
+          val disjoint = rs.predicateSql.isDefined && {
+            val rows: Seq[org.apache.spark.sql.Row] = winAdds.map(a =>
+              new org.apache.spark.sql.catalyst.expressions
+                .GenericRowWithSchema(
+                  Array[Any](RowCodec.addToRow(a), v), snap.addsSchema))
+            val df = spark.createDataFrame(rows.asJava, snap.addsSchema)
+            new DeltaScan(snap, rs.predicateSql)
+              .pruneAdds(df).limit(1).count() == 0
+          }
+          if (!disjoint) fail(new ConcurrentAppendException(
+            s"concurrent append at version $v for $pathStr may match " +
+              s"the predicate ${rs.predicateSql.getOrElse("<none>")}"))
+        }
+      // provably disjoint winner → rebase past it
+      case DeltaTable.Blind =>
+        // Serializable isolation: a blind append may not slide past a
+        // commit that REMOVED data — serializing the append first
+        // would change which rows that delete saw
+        // (delta.isolationLevel; WriteSerializable keeps the default
+        // append-commutes-with-anything behavior)
+        if (TableProperties.serializableIsolation(snap.metadata) &&
+            winnerField("remove").exists(r =>
+              Option(r.get("dataChange")).forall(_.asBoolean)))
+          fail(new ConcurrentWriteException(
+            s"serializable isolation: concurrent data removal at " +
+              s"version $v for $pathStr"))
+    }
+  }
 
   private def now(): Long = System.currentTimeMillis()
 
@@ -219,18 +297,22 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         s"table at $pathStr is append-only (delta.appendOnly=true)")
   }
 
-  /** Best-effort incremental `.crc` update after a commit (reference
-    * kernel/src/crc/): previous version's checksum + this commit's
-    * added/removed file sizes — totals AND the per-bin file-size
-    * histogram advance without listing anything. Skipped when the
-    * chain is broken (no prior crc) — never load-bearing.
+  /** Best-effort `.crc` after a commit (reference kernel/src/crc/):
+    * the previous version's checksum advanced by this commit's own
+    * added/removed file sizes and new P&M — totals AND the per-bin
+    * file-size histogram advance without listing anything. Version 0
+    * starts from the empty table. Skipped when the chain is broken (no
+    * prior crc) — never load-bearing.
     */
-  private def maybeWriteChecksum(v: Long, addedSizes: Seq[Long],
-      removedSizes: Seq[Long],
-      newMeta: Option[graft.delta.Metadata] = None,
-      newProto: Option[Protocol] = None): Unit =
+  private def writeChecksum(v: Long, newProto: Option[Protocol],
+      newMeta: Option[graft.delta.Metadata], addedSizes: Seq[Long],
+      removedSizes: Seq[Long]): Unit =
     try {
-      Checksum.read(fs, logDir, v - 1).foreach { prev =>
+      val prev =
+        if (v == 0) Some(Checksum.VersionChecksum(0L, 0L, newProto.get,
+          newMeta.get, Some(FileSizeHistogram.empty)))
+        else Checksum.read(fs, logDir, v - 1)
+      prev.foreach { prev =>
         val hist = prev.fileSizeHistogram.map { h0 =>
           val h1 = addedSizes.foldLeft(h0)(_.insert(_))
           removedSizes.foldLeft(h1)(_.remove(_))
@@ -244,14 +326,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       }
     } catch { case _: Exception => () }
 
-  private def commitInfoLine(op: String, params: Map[String, String],
-      ict: Option[Long] = None): String =
-    JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-      timestamp = now(), operation = op, operationParameters = params,
-      engineInfo = Some("graft-spark/0.1.0"),
-      inCommitTimestamp = ict,
-      correlationId = correlationId))))
-
   /** Where the commit for `version` lives: the catalog's ratified
     * staged file when one exists (it is the authority — the published
     * copy may not exist yet), the published path otherwise.
@@ -262,33 +336,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .getOrElse(FileNames.commitFile(logDir, version))
 
   /** In-commit timestamp of the commit file at `version`, if any. */
-  private def commitIct(version: Long): Option[Long] = {
-    val p = resolveCommitPath(version)
-    if (version < 0 || !fs.exists(p)) None
-    else Storage.readLines(fs, p).iterator
-      .filter(_.contains("\"commitInfo\""))
-      .map(JsonLog.parseLine)
-      .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
-      .flatMap(ci => Option(ci.get("inCommitTimestamp"))
-        .filterNot(_.isNull).map(_.asLong))
-      .nextOption()
-  }
-
-  /** Monotonic in-commit timestamp for a commit whose PREDECESSOR is
-    * `predVersion` (reference transaction/commit_info.rs:484; protocol:
-    * strictly greater than the predecessor's, regardless of clock
-    * skew). Commit retries must recompute this against the commit that
-    * actually won the race, not the stale snapshot — a concurrent
-    * writer may have committed a larger ICT.
-    */
-  private def ictAt(snap: Snapshot, predVersion: Long): Option[Long] = {
-    if (!snap.metadata.configuration.get(DeltaTable.ICT_ENABLED_KEY)
-        .exists(_.equalsIgnoreCase("true"))) return None
-    Some(math.max(now(), commitIct(predVersion).getOrElse(0L) + 1))
-  }
-
-  private def ictFor(snap: Snapshot): Option[Long] =
-    ictAt(snap, snap.version)
+  private def commitIct(version: Long): Option[Long] =
+    Some(version).filter(_ >= 0).map(resolveCommitPath).filter(fs.exists)
+      .flatMap(p => Storage.readLines(fs, p).iterator
+        .filter(_.contains("\"commitInfo\""))
+        .map(JsonLog.parseLine)
+        .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
+        .flatMap(ci => Option(ci.get("inCommitTimestamp"))
+          .filterNot(_.isNull).map(_.asLong))
+        .nextOption())
 
   /** Publish ratified catalog commits `<= upToVersion` (default: all)
     * to their `_delta_log/{version}.json` locations (reference
@@ -475,18 +531,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       // getRawPath keeps %-escapes so a literal '%' or space in a
       // partition dir name round-trips exactly
       val rel = relOf(abs)
-      val pv: Map[String, String] = hiveRel.split('/').dropRight(1)
-        .map(uriDecodeSegment)
-        .filter(_.contains('='))
-        .map { seg =>
-          val Array(k0, v) = seg.split("=", 2)
-          // materialized-partition writes partition on an alias of the
-          // physical column (see above) — strip it back off
-          val k = if (k0.startsWith(DeltaTable.MAT_PART_PREFIX))
-            k0.stripPrefix(DeltaTable.MAT_PART_PREFIX) else k0
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                else unescapePathName(v))
-        }.toMap
+      // materialized-partition writes partition on an alias of the
+      // physical column (see above) — strip it back off
+      val pv = DeltaTable.hivePartitionValues(hiveRel).map { case (k, v) =>
+        k.stripPrefix(DeltaTable.MAT_PART_PREFIX) -> v }
       AddFile(
         path = rel,
         partitionValues =
@@ -593,18 +641,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         Clustering.domainFor(Nil).copy(removed = true)
       else Clustering.domainFor(cols.map(c => Seq(
         ColumnMapping.physicalName(snap.schema.fields.find(_.name == c).get))))
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE",
-        Map("operation" -> "CLUSTER BY",
-          "clusterBy" -> cols.mkString(",")), ictFor(snap))) ++
-      proto.map(p =>
-        JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq ++
-      Seq(JsonLog.writeAction(SingleAction(domainMetadata = Some(domain))))
-    val committed = commitActions(snap.version + 1, lines,
-      retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newProto = proto)
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    commit(Some(snap), "ALTER TABLE",
+      Map("operation" -> "CLUSTER BY", "clusterBy" -> cols.mkString(",")),
+      protocol = proto, domains = Seq(domain))
   }
 
   /** Bin-packing OPTIMIZE for any table: rewrite the live file set
@@ -716,32 +755,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // the candidate scan to them turns the per-commit probe from
     // O(live files) into O(commit) at ingest scale (a 5M-file table
     // would otherwise replay + collect its whole file list after
-    // every append). The predicate is partition-value exact-match,
-    // built only for string/integral partition types (timestamp/
-    // decimal literal round-trips are format-sensitive and a wrongly
-    // PRUNED partition would silently skip its compaction); capped at
-    // 64 touched partitions so the predicate never explodes — wider
-    // commits fall back to the full scan.
-    val partCols0 = snap.partitionColumns
-    val safePartTypes = partCols0.forall { c =>
-      snap.schema.fields.find(_.name == c).map(_.dataType).exists {
-        case StringType | IntegerType | LongType | ShortType |
-             ByteType | BooleanType => true
-        case _ => false
-      }
-    }
-    val predicate: Option[String] = touchedPartitions
-      .filter(p => partCols0.nonEmpty && safePartTypes &&
-        p.nonEmpty && p.size <= 64)
-      .map(_.toSeq.map { pv =>
-        partCols0.map { c =>
-          pv.getOrElse(c, null) match {
-            case null => s"`$c` IS NULL"
-            case v => s"`$c` = '${v.replace("'", "''")}'"
-          }
-        }.mkString("(", " AND ", ")")
-      }.mkString(" OR "))
-    val small = new DeltaScan(snap, predicate).collectAddFiles(slim = true)
+    // every append).
+    val small = new DeltaScan(snap, None,
+        touchedPartitions.filter(_ => snap.partitionColumns.nonEmpty))
+      .collectAddFiles(slim = true)
       .filter(_.size < targetBytes / 2)
     val toCompact = small.groupBy(_.partitionValues).values
       .filter(_.size >= minNumFiles).toSeq.flatten
@@ -768,7 +785,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * can tune without a metadata commit.
     */
   private def maybeAutoCompact(metadata: graft.delta.Metadata,
-      touchedPartitions: Option[Set[Map[String, String]]] = None): Unit = {
+      touchedPartitions: Set[Map[String, String]]): Unit = {
     val on = metadata.configuration
       .get(DeltaTable.AUTO_COMPACT_KEY).exists(_.equalsIgnoreCase("true"))
     if (!on || RowTracking.enabled(metadata)) return
@@ -782,7 +799,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       val target = spark.conf
         .getOption("spark.graft.autoCompact.targetFileBytes")
         .map(_.toLong).getOrElse(0L)
-      autoCompact(minN, target, touchedPartitions)
+      autoCompact(minN, target, Some(touchedPartitions))
     } catch { case e: Exception =>
       org.slf4j.LoggerFactory.getLogger(getClass)
         .warn(s"auto-compact after commit failed (best-effort): $e")
@@ -835,43 +852,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val staged0 =
       try stageFiles(layout(input), snap, passthrough)
       finally if (cacheInput) { input.unpersist(false); () }
-    // fresh default ids for the new files + an advanced high-water mark
-    // (adds still REQUIRE baseRowId per protocol; the materialized
-    // columns override them row-by-row on read)
-    val (staged, rtLines) =
-      if (!rtEnabled) (staged0, Nil)
-      else {
-        val (assigned, hwm) = RowTracking.assign(staged0,
-          RowTracking.highWaterMark(snap), snap.version + 1)
-        (assigned, Seq(JsonLog.writeAction(SingleAction(domainMetadata =
-          Some(RowTracking.domainMetadataFor(hwm))))))
-      }
-    val removes = existing.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = false,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val adds = staged.map(_.copy(dataChange = false))
-    val tail = rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
     // concurrent appends rebase past a pure compaction (their files are
-    // never among those compacted); row-tracking OPTIMIZE keeps
-    // fail-fast — its high-water-mark domain metadata must not slide
-    // past a winner that also advanced the HWM
-    val readSet =
-      if (rtEnabled) None
-      else Some(DeltaTable.ReadSet(snap, None,
-        existing.map(a => Storage.canonicalPathKey(a.path)).toSet,
-        maintenance = true))
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("OPTIMIZE", params, ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil, readSet)
-    maybeWriteChecksum(committed, adds.map(_.size),
-      existing.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    // never among those compacted); on a row-tracking table the commit
+    // assigns the new files fresh default ids (the materialized columns
+    // override them row-by-row on read) and its high-water mark keeps
+    // it strict
+    commit(Some(snap), "OPTIMIZE", params,
+      removes = existing.map(_.toRemove(dataChange = false)),
+      adds = staged0.map(_.copy(dataChange = false)),
+      policy = DeltaTable.Reads(DeltaTable.ReadSet(None, maintenance = true)))
   }
 
   /** Rename logical columns to physical names + field ids for writing
@@ -932,46 +921,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .map { st =>
         val rel = st.getPath.toUri.getRawPath.stripPrefix(
           fs.makeQualified(root).toUri.getRawPath).stripPrefix("/")
-        val pv: Map[String, String] = rel.split('/').dropRight(1)
-          .map(uriDecodeSegment)
-          .filter(_.contains('='))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                  else unescapePathName(v))
-          }.toMap
+        val pv = DeltaTable.hivePartitionValues(rel)
         AddCDCFile(rel,
           physPartCols.map(c => c -> pv.getOrElse(c, null)).toMap,
           st.getLen, dataChange = false)
       }
   }
 
-  /** URI-decode one path segment ('+' stays literal). */
-  private def uriDecodeSegment(s: String): String =
-    try java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
-    catch { case _: IllegalArgumentException => s }
-
-  /** Hive-style partition-dir unescaping (%XX only — '+' stays). */
-  private def unescapePathName(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length) {
-        try {
-          b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => b.append(c); i += 1 }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
 
   /** Blind append (reference transaction/mod.rs add_files + commit).
-    * With row tracking enabled, fresh adds receive baseRowId ranges from
-    * the delta.rowTracking high-water mark and the commit carries the
-    * advanced mark (reference row_tracking.rs:19-68); such commits are
-    * not blind-retryable (a conflicting writer may have consumed ids).
+    * With row tracking enabled, [[commit]] assigns the fresh adds
+    * baseRowId ranges past the delta.rowTracking high-water mark; such
+    * commits never rebase (a conflicting writer may have consumed ids).
     */
   def append(df: DataFrame, txn: Option[SetTransaction] = None,
       mergeSchema: Boolean = false,
@@ -1066,41 +1027,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val (dfComplete, identityCols) = IdentityColumns.assign(df, snap)
     val staged = stageFiles(dfComplete, snap,
       nullGeneratedAsOmitted = nullGeneratedAsOmitted)
-    val rowTracking = RowTracking.enabled(snap.metadata)
-    val v = snap.version + 1
-    val (adds, hwmLine) =
-      if (!rowTracking) (staged, Nil)
-      else {
-        val (assigned, hwm) =
-          RowTracking.assign(staged, RowTracking.highWaterMark(snap), v)
-        (assigned, Seq(JsonLog.writeAction(SingleAction(
-          domainMetadata = Some(RowTracking.domainMetadataFor(hwm))))))
-      }
     // identity marks advance from the staged stats; the commit then
-    // carries the updated metadata and is no longer blind-retryable
-    // (a concurrent writer may have consumed the same value range)
+    // carries the updated metadata, which keeps it from rebasing (a
+    // concurrent writer may have consumed the same value range)
     val idHwms = IdentityColumns.hwmFromStats(staged, snap, identityCols)
     val idMeta = if (idHwms.isEmpty) None
       else Some(IdentityColumns.advance(snap.metadata, idHwms))
-    val tail =
-      txn.map(t => JsonLog.writeAction(SingleAction(txn = Some(t)))).toSeq ++
-      hwmLine ++
-      idMeta.map(m =>
-        JsonLog.writeAction(SingleAction(metaData = Some(m)))).toSeq ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    // commitInfo regenerates per attempt: the ICT predecessor after a
-    // rebase is the commit that won the race, not the stale snapshot
-    val committed = commitActions(v,
-      cv => commitInfoLine("WRITE", Map("mode" -> "Append"),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = !rowTracking && idMeta.isEmpty,
-      txnAppIds = txn.map(_.appId).toSeq,
-      serializable = TableProperties.serializableIsolation(snap.metadata))
-    maybeWriteChecksum(committed, adds.map(_.size), Nil, newMeta = idMeta)
-    maybeAutoCheckpoint(committed, idMeta.getOrElse(snap.metadata))
-    maybeAutoCompact(snap.metadata,
-      Some(adds.map(_.partitionValues).toSet))
-    committed
+    commit(Some(snap), "WRITE", Map("mode" -> "Append"),
+      metadata = idMeta, txns = txn.toSeq, adds = staged,
+      policy = DeltaTable.Blind)
   }
 
   /** Replace the table's contents atomically: one commit removes every
@@ -1148,25 +1083,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         snap0.builtAsLatest))
     enforceNoExtraColumns(df, snap)
     val existing = new DeltaScan(snap0, None).collectAddFiles(slim = true)
-    val stagedRaw = stageFiles(df, snap,
+    val staged = stageFiles(df, snap,
       nullGeneratedAsOmitted = nullGeneratedAsOmitted)
-    // row-tracking tables assign fresh baseRowIds + advance the HWM on
-    // EVERY data-adding commit — an overwrite without them would serve
-    // null _row_ids and break row-tracking CDF (appendFrom parity)
-    val (staged, hwmLine) =
-      if (!RowTracking.enabled(snap0.metadata)) (stagedRaw, Nil)
-      else {
-        val (assigned, hwm) = RowTracking.assign(stagedRaw,
-          RowTracking.highWaterMark(snap0), snap0.version + 1)
-        (assigned, Seq(JsonLog.writeAction(SingleAction(
-          domainMetadata = Some(RowTracking.domainMetadataFor(hwm))))))
-      }
-    val removes = existing.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
     // a replaced schema can INTRODUCE geo columns (e.g. a df read from
     // another geo table): the same dual-sided feature upgrade the
     // alterSchema path emits must ride this commit too, or every later
@@ -1177,27 +1095,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         Some(TableFeatures.upgraded(snap0.protocol,
           Seq(GeoTypes.FEATURE), Seq(GeoTypes.FEATURE)))
       else None
-    val protoLine = newProto.map(p =>
-      JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq
-    val tail =
-      txn.map(t => JsonLog.writeAction(SingleAction(txn = Some(t)))).toSeq ++
-      hwmLine ++
-      protoLine ++
-      newMeta.map(m =>
-        JsonLog.writeAction(SingleAction(metaData = Some(m)))).toSeq ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      staged.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    val committed = commitActions(snap0.version + 1,
-      cv => commitInfoLine("WRITE", Map("mode" -> "Overwrite"),
-        ictAt(snap0, cv - 1)) +: tail,
-      retryable = false, txn.map(_.appId).toSeq)
-    // the CRC must carry the upgraded protocol too: its fast path
-    // serves P&M verbatim, and a stale protocol under a geo schema
-    // fails the gate on the very next read
-    maybeWriteChecksum(committed, staged.map(_.size), existing.map(_.size),
-      newMeta = newMeta, newProto = newProto)
-    maybeAutoCheckpoint(committed, newMeta.getOrElse(snap0.metadata))
-    committed
+    commit(Some(snap0), "WRITE", Map("mode" -> "Overwrite"),
+      protocol = newProto, metadata = newMeta, txns = txn.toSeq,
+      removes = existing.map(_.toRemove()), adds = staged)
   }
 
   /** DML predicates must be deterministic (delta-spark parity): the
@@ -1262,31 +1162,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       if (cdf) stageCdcFiles(full.filter(expr(predicateSql)), snap, "delete")
       else Nil
     if (cdf) full.unpersist()
-    val removes = candidates.map { a =>
-      // the tombstone MUST carry the candidate's DV descriptor: the
-      // replay dedup key is (path, dvUniqueId), so a DV-less remove
-      // would never shadow a DV-carrying add — its rows would resurrect
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val (newAddsRt, rtLines) =
-      assignRowIds(snap, newAdds, snap.version + 1)
-    val tail = rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      newAddsRt.map(a => JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-      cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("DELETE", Map("predicate" -> predicateSql),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil,
-      Some(DeltaTable.ReadSet(snap, Some(predicateSql),
-        candidates.map(a => Storage.canonicalPathKey(a.path)).toSet)))
-    maybeWriteChecksum(committed,
-      newAdds.map(_.size), candidates.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    commit(Some(snap), "DELETE", Map("predicate" -> predicateSql),
+      removes = candidates.map(_.toRemove()), adds = newAdds,
+      cdc = cdcActions,
+      policy = DeltaTable.Reads(DeltaTable.ReadSet(Some(predicateSql))))
   }
 
   /** Read specific add files with partition values injected. */
@@ -1309,22 +1188,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
            .withColumnRenamed("_row_commit_version", vCol),
          Seq(idCol, vCol))
       case _ => (readFiles(snap, adds), Nil)
-    }
-
-  /** Row-tracking commit invariant: EVERY add carries
-    * baseRowId/defaultRowCommitVersion when the feature is enabled
-    * (reference row_tracking.rs assignment). Fresh defaults; rows that
-    * must keep their ids do so via the materialized columns staged into
-    * the files. Returns the annotated adds + the HWM domain line.
-    */
-  private def assignRowIds(snap: Snapshot, adds: Seq[AddFile],
-      v: Long): (Seq[AddFile], Seq[String]) =
-    if (!RowTracking.enabled(snap.metadata) || adds.isEmpty) (adds, Nil)
-    else {
-      val (assigned, hwm) = RowTracking.assign(adds,
-        RowTracking.highWaterMark(snap), v)
-      (assigned, Seq(JsonLog.writeAction(SingleAction(domainMetadata =
-        Some(RowTracking.domainMetadataFor(hwm))))))
     }
 
   /** UPDATE SET ... WHERE ...: files containing matching rows are
@@ -1393,28 +1256,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       else stageCdcMulti(Seq(matched -> "update_preimage",
         applied -> "update_postimage"), snap)
     full.unpersist()
-    val removes = candidates.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val (newAddsRt, rtLines) =
-      assignRowIds(snap, newAdds, snap.version + 1)
-    val tail = rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      newAddsRt.map(a => JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-      cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("UPDATE", Map("predicate" -> predicateSql),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil,
-      Some(DeltaTable.ReadSet(snap, Some(predicateSql),
-        candidates.map(a => Storage.canonicalPathKey(a.path)).toSet)))
-    maybeWriteChecksum(committed, newAdds.map(_.size),
-      candidates.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    commit(Some(snap), "UPDATE", Map("predicate" -> predicateSql),
+      removes = candidates.map(_.toRemove()), adds = newAdds,
+      cdc = cdcActions,
+      policy = DeltaTable.Reads(DeltaTable.ReadSet(Some(predicateSql))))
   }
 
   /** ONE distributed pass per candidate file: build the new-deletion
@@ -1493,28 +1338,43 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     if (candidates.isEmpty) return snap.version
 
     val perFile = dvMatchPerFile(scan, candidates, predicateSql)
-    val matchedFiles = perFile.filter(_._3 > 0)
+    val matchedFiles = perFile.filter(_._3 > 0).toSeq
     if (matchedFiles.isEmpty) return snap.version
 
-    val byPath = candidates.map { a =>
+    commitDvDml(snap, scan, byQualifiedPath(candidates), matchedFiles,
+      "DELETE", predicateSql)
+  }
+
+  /** The table-qualified URI path of each add — the key
+    * [[dvMatchPerFile]] reports files under.
+    */
+  private def byQualifiedPath(adds: Seq[AddFile]): Map[String, AddFile] =
+    adds.map { a =>
       fs.makeQualified(
         Storage.childPath(root, Storage.decodeUriPath(a.path)))
         .toUri.getPath -> a
     }.toMap
 
-    val (gone, partialFiles) = matchedFiles.toSeq.partition {
+  /** The commit tail of [[deleteWhereDV]] and [[updateWhereDV]]:
+    * fully-matched files drop, partially-matched ones swap their DV.
+    * Only the latter re-enter the log (with their original stats marked
+    * non-tight), so exactly their stats are fetched.
+    */
+  private def commitDvDml(snap: Snapshot, scan: DeltaScan,
+      byPath: Map[String, AddFile],
+      matchedFiles: Seq[(String, Array[Byte], Long, Long)], op: String,
+      predicateSql: String, newAdds: Seq[AddFile] = Nil,
+      cdc: Seq[AddCDCFile] = Nil): Long = {
+    val (gone, partialFiles) = matchedFiles.partition {
       case (_, _, matched, live) => matched == live
     }
-    // only the partially-matched files re-enter the log (with their
-    // original stats marked non-tight) — fetch exactly their stats
     val statsOf = statsForPaths(scan,
       partialFiles.map(p => byPath(p._1).path).toSet)
-    val byPathStats = byPath.map { case (k, a) =>
-      k -> a.copy(stats = statsOf.get(a.path).orElse(a.stats))
-    }
-    commitDvSwaps(snap, gone.map(_._1), partialFiles, byPathStats,
-      "DELETE", Map("predicate" -> predicateSql),
-      readPredicate = Some(predicateSql))
+    commitDvSwaps(snap, gone.map(_._1), partialFiles,
+      byPath.map { case (k, a) =>
+        k -> a.copy(stats = statsOf.get(a.path).orElse(a.stats))
+      },
+      op, Map("predicate" -> predicateSql), Some(predicateSql), newAdds, cdc)
   }
 
   /** Original stats JSON for the named add paths, fetched in ONE
@@ -1540,75 +1400,44 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .toMap
   }
 
-  /** The shared DV-swap commit tail: remove+add pairs swapping each
-    * file's deletion vector (fully-dead files remove without re-add),
-    * first-use protocol upgrade, checksum + auto-checkpoint. Used by
-    * predicate DELETE/UPDATE ([[deleteWhereDV]]) and by
+  /** The shared DV-swap commit: remove+add pairs swapping each file's
+    * deletion vector (fully-dead files remove without re-add), plus
+    * any `newAdds`/`cdc` the operation staged, with the first-use
+    * protocol upgrade. Used by predicate DELETE/UPDATE
+    * ([[deleteWhereDV]], [[updateWhereDV]]) and by
     * [[graft.delta.EqualityDeletes.commitAsDeletionVectors]], which
-    * materializes tree-level equality deletes into the log.
+    * materializes tree-level equality deletes into the log. `byPath`
+    * must carry the original stats of the partially-matched files.
     */
   private[graft] def commitDvSwaps(snap: Snapshot, gonePaths: Seq[String],
       partialFiles: Seq[(String, Array[Byte], Long, Long)],
       byPath: Map[String, AddFile], opName: String,
       opParams: Map[String, String],
-      readPredicate: Option[String]): Long = {
+      readPredicate: Option[String],
+      newAdds: Seq[AddFile] = Nil,
+      cdc: Seq[AddCDCFile] = Nil): Long = {
     val descs = dvSwapDescriptors(partialFiles, byPath)
-
-    def removeOf(a: AddFile): RemoveFile = RemoveFile(
-      a.path, Some(now()), dataChange = true,
-      extendedFileMetadata = Some(true),
-      partitionValues = Some(a.partitionValues), size = Some(a.size),
-      deletionVector = a.deletionVector)
-
-    val removes = (gonePaths ++ partialFiles.map(_._1))
-      .map(p => removeOf(byPath(p)))
     // stats on a DV-carrying add describe the PHYSICAL file, so they
     // must be flagged tightBounds:false (protocol contract — external
     // readers may otherwise do metadata-only aggregates over dead rows)
-    val newAdds = partialFiles.map { case (p, _, _, _) =>
+    val swapped = partialFiles.map { case (p, _, _, _) =>
       val a = byPath(p)
       a.copy(deletionVector = Some(descs(p)), dataChange = true,
         stats = a.stats.map(StatsJson.markNonTight))
     }
-
     // upgrade preserves existing + legacy-implied features
     // (reference table_features upgrade path)
-    val needsUpgrade = snap.protocol.minReaderVersion < 3 ||
-      !snap.protocol.readerFeatures.exists(_.contains("deletionVectors"))
-    val protoLine =
-      if (needsUpgrade)
-        Seq(JsonLog.writeAction(SingleAction(protocol = Some(
-          TableFeatures.upgraded(snap.protocol,
-            Seq("deletionVectors"), Seq("deletionVectors"))))))
-      else Nil
-
-    val tail =
-      protoLine ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      newAdds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    // a commit carrying its own protocol upgrade can never rebase —
-    // winnerField("protocol") would be OUR line; keep those strict
-    val committed =
-      if (needsUpgrade)
-        commitActions(snap.version + 1,
-          cv => commitInfoLine(opName, opParams,
-            ictAt(snap, cv - 1)) +: tail, retryable = false, Nil)
-      else commitActions(snap.version + 1,
-        cv => commitInfoLine(opName, opParams,
-          ictAt(snap, cv - 1)) +: tail,
-        retryable = false, Nil,
-        Some(DeltaTable.ReadSet(snap, readPredicate,
-          (gonePaths ++ partialFiles.map(_._1))
-            .map(p => Storage.canonicalPathKey(byPath(p).path)).toSet)))
-    maybeWriteChecksum(committed,
-      newAdds.map(_.size),
-      (gonePaths ++ partialFiles.map(_._1)).map(p => byPath(p).size),
-      newProto = if (needsUpgrade)
-        Some(TableFeatures.upgraded(snap.protocol,
-          Seq("deletionVectors"), Seq("deletionVectors")))
-      else None)
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    val upgrade =
+      if (snap.protocol.minReaderVersion >= 3 &&
+          snap.protocol.readerFeatures.exists(_.contains("deletionVectors")))
+        None
+      else Some(TableFeatures.upgraded(snap.protocol,
+        Seq("deletionVectors"), Seq("deletionVectors")))
+    commit(Some(snap), opName, opParams, protocol = upgrade,
+      removes = (gonePaths ++ partialFiles.map(_._1))
+        .map(p => byPath(p).toRemove()),
+      adds = swapped ++ newAdds, cdc = cdc,
+      policy = DeltaTable.Reads(DeltaTable.ReadSet(readPredicate)))
   }
 
   /** UPDATE WHERE via deletion vectors (delta-spark's DV-based UPDATE;
@@ -1642,13 +1471,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // per-file deletion bitmaps for the matching rows — executor-built,
     // compressed bytes to the driver (shared pass with deleteWhereDV)
     val perFile = dvMatchPerFile(scan, candidates, predicateSql)
-    val matchedFiles = perFile.filter(_._3 > 0)
+    val matchedFiles = perFile.filter(_._3 > 0).toSeq
     if (matchedFiles.isEmpty) return snap.version
-    val byPath = candidates.map { a =>
-      fs.makeQualified(
-        Storage.childPath(root, Storage.decodeUriPath(a.path)))
-        .toUri.getPath -> a
-    }.toMap
+    val byPath = byQualifiedPath(candidates)
     val matchedAdds = matchedFiles.map(f => byPath(f._1)).toSeq
 
     // the UPDATED row copies (only these are written)
@@ -1663,57 +1488,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       else stageCdcMulti(Seq(matched -> "update_preimage",
         applied -> "update_postimage"), snap)
     full.unpersist()
-
-    // DV swap per matched file: fully-matched files drop entirely
-    val (gone, partialFiles) = matchedFiles.toSeq.partition {
-      case (_, _, matched, live) => matched == live
-    }
-    val descs = dvSwapDescriptors(partialFiles, byPath)
-    val removes = (gone.map(_._1) ++ partialFiles.map(_._1)).map { p =>
-      val a = byPath(p)
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val statsOf = statsForPaths(scan,
-      partialFiles.map(p => byPath(p._1).path).toSet)
-    val swapped = partialFiles.map { case (p, _, _, _) =>
-      val a = byPath(p)
-      a.copy(deletionVector = Some(descs(p)), dataChange = true,
-        stats = statsOf.get(a.path).orElse(a.stats)
-          .map(StatsJson.markNonTight))
-    }
-
-    val needsUpgrade = snap.protocol.minReaderVersion < 3 ||
-      !snap.protocol.readerFeatures.exists(_.contains("deletionVectors"))
-    val proto =
-      if (needsUpgrade) Some(TableFeatures.upgraded(snap.protocol,
-        Seq("deletionVectors"), Seq("deletionVectors")))
-      else None
-    val (newAddsRt, rtLines) =
-      assignRowIds(snap, newAdds, snap.version + 1)
-    val tail =
-      proto.map(p =>
-        JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq ++
-      rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      (swapped ++ newAddsRt).map(a =>
-        JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-      cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-    // a commit carrying its own protocol upgrade can never rebase
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("UPDATE", Map("predicate" -> predicateSql),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil,
-      if (needsUpgrade) None
-      else Some(DeltaTable.ReadSet(snap, Some(predicateSql),
-        matchedAdds.map(a => Storage.canonicalPathKey(a.path)).toSet)))
-    maybeWriteChecksum(committed,
-      swapped.map(_.size) ++ newAdds.map(_.size),
-      matchedAdds.map(_.size), newProto = proto)
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    commitDvDml(snap, scan, byPath, matchedFiles, "UPDATE", predicateSql,
+      newAdds, cdcActions)
   }
 
   /** MERGE INTO (upsert): clauses evaluate in order per row, first
@@ -2013,41 +1789,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           (deletedRows.toSeq ++ bsDeleted).map(_ -> "delete") ++
           insertRaw.toSeq.map(_ -> "insert"), snap)
 
-      val removes = candidates.map { a =>
-        RemoveFile(a.path, Some(now()), dataChange = true,
-          extendedFileMetadata = Some(true),
-          partitionValues = Some(a.partitionValues), size = Some(a.size),
-          deletionVector = a.deletionVector)
-      }
       val idHwms = IdentityColumns.hwmFromStats(newAdds, snap, identityCols)
       val idMeta = if (idHwms.isEmpty) None
         else Some(IdentityColumns.advance(snap.metadata, idHwms))
-      val (newAddsRt, rtLines) =
-        assignRowIds(snap, newAdds, snap.version + 1)
-      val tail =
-        idMeta.map(m =>
-          JsonLog.writeAction(SingleAction(metaData = Some(m)))).toSeq ++
-        rtLines ++
-        removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-        newAddsRt.map(a => JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-        cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-      // MERGE reads under a join condition, not a single-table
-      // predicate — no stats proof possible, so any concurrent add is
-      // a conflict (predicateSql = None keeps the check conservative);
-      // identity-advancing merges also change metadata and stay strict
-      val committed = commitActions(snap.version + 1,
-        cv => commitInfoLine("MERGE", Map("predicate" -> condSql),
-          ictAt(snap, cv - 1)) +: tail,
-        retryable = false, Nil,
-        if (idMeta.isDefined) None
-        else Some(DeltaTable.ReadSet(snap, None,
-          candidates.map(a => Storage.canonicalPathKey(a.path)).toSet)))
       matchedTagged.unpersist()
       insertRaw.foreach(_.unpersist())
-      maybeWriteChecksum(committed, newAdds.map(_.size),
-        candidates.map(_.size), newMeta = idMeta)
-      maybeAutoCheckpoint(committed, idMeta.getOrElse(snap.metadata))
-      committed
+      // MERGE reads under a join condition, not a single-table
+      // predicate — no stats proof possible, so any concurrent add is
+      // a conflict (predicateSql = None keeps the check conservative)
+      commit(Some(snap), "MERGE", Map("predicate" -> condSql),
+        metadata = idMeta, removes = candidates.map(_.toRemove()),
+        adds = newAdds, cdc = cdcActions,
+        policy = DeltaTable.Reads(DeltaTable.ReadSet(None)))
     } finally {
       src.unpersist()
       if (fullId != null) fullId.unpersist()
@@ -2113,20 +1866,11 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val newProto = if (featureAdds.isEmpty && writerOnlyAdds.isEmpty) None
       else Some(TableFeatures.upgraded(snap.protocol, featureAdds,
         featureAdds ++ writerOnlyAdds))
-    val protoLine = newProto.map(p =>
-      JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE", Map(
+    commit(Some(snap), "ALTER TABLE", Map(
         "operation" -> "CHANGE SCHEMA",
         "added" -> schemaDiff.added.map(_.name).mkString(","),
         "changed" -> schemaDiff.changed.map(_._1.name).mkString(",")),
-        ictFor(snap))) ++ protoLine ++ Seq(
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(snap.version + 1, lines, retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta),
-      newProto = newProto)
-    maybeAutoCheckpoint(committed, meta)
-    committed
+      protocol = newProto, metadata = Some(meta))
   }
 
   /** ALTER TABLE ADD COLUMN (nullable — required for old files). */
@@ -2480,44 +2224,23 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   private def commitSchemaOnly(snap: Snapshot, finalSchema: StructType,
       partCols: Seq[String], config: Map[String, String],
       params: Map[String, String]): Long = {
-    val meta = snap.metadata.copy(
-      schemaString = GeoTypes.toSchemaString(finalSchema),
-      partitionColumns = partCols,
-      configuration = config)
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE", params, ictFor(snap)),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(snap.version + 1, lines,
-      retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta))
-    maybeAutoCheckpoint(committed, meta)
-    committed
+    commit(Some(snap), "ALTER TABLE", params,
+      metadata = Some(snap.metadata.copy(
+        schemaString = GeoTypes.toSchemaString(finalSchema),
+        partitionColumns = partCols,
+        configuration = config)))
   }
 
   /** ALTER TABLE SET TBLPROPERTIES (metadata-only commit). Enabling
-    * in-commit timestamps mid-log additionally records the enablement
-    * version + timestamp (reference history_manager — time travel needs
-    * the boundary: commits below it order by file mtime, commits at or
-    * above it by ICT) and stamps the enabling commit itself with an
-    * ICT, per protocol.
+    * in-commit timestamps mid-log declares the feature here; [[commit]]
+    * records the enablement version + timestamp (reference
+    * history_manager — commits below the boundary order by file mtime,
+    * commits at or above it by ICT) and stamps the enabling commit
+    * itself with an ICT, per protocol.
     */
   def setProperties(props: Map[String, String],
       operation: String = "SET TBLPROPERTIES"): Long = {
     val snap = snapshot()
-    def ictOn(c: Map[String, String]) =
-      c.get(DeltaTable.ICT_ENABLED_KEY).exists(_.equalsIgnoreCase("true"))
-    val enablingIct =
-      ictOn(props) && !ictOn(snap.metadata.configuration)
-    val v = snap.version + 1
-    val ict =
-      if (enablingIct) Some(math.max(now(),
-        commitIct(snap.version).getOrElse(0L) + 1))
-      else ictFor(snap)
-    val enablementProps =
-      if (enablingIct) Map(
-        DeltaTable.ICT_ENABLEMENT_VERSION_KEY -> v.toString,
-        DeltaTable.ICT_ENABLEMENT_TIMESTAMP_KEY -> ict.get.toString)
-      else Map.empty[String, String]
     // enabling row tracking fixes the materialized column names at the
     // SAME commit (they must exist before any rewrite materializes ids)
     val enablingRt = props.get(RowTracking.ENABLED_KEY)
@@ -2532,8 +2255,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         RowTracking.freshMaterializedNames()
       else Map.empty[String, String]
     val meta = snap.metadata.copy(
-      configuration = snap.metadata.configuration ++ props ++
-        enablementProps ++ rtProps)
+      configuration = snap.metadata.configuration ++ props ++ rtProps)
+    val enablingIct =
+      DeltaTable.ictEnabled(meta) && !DeltaTable.ictEnabled(snap.metadata)
     // `delta.feature.<name>=supported` declares a feature on ALTER just
     // as it does on CREATE (delta-spark's convention)
     val explicitFeatures = props.collect {
@@ -2567,17 +2291,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // every subsequent read at the snapshot gate
     FeatureRequirements.validateEnabled(newProto.getOrElse(snap.protocol),
       meta)
-    val protoLine = newProto.map(p =>
-      JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE", Map("operation" -> operation),
-        ict)) ++ protoLine ++ Seq(
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(v, lines, retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta),
-      newProto = newProto)
-    maybeAutoCheckpoint(committed, meta)
-    committed
+    commit(Some(snap), "ALTER TABLE", Map("operation" -> operation),
+      protocol = newProto, metadata = Some(meta))
   }
 
   /** ALTER TABLE UNSET TBLPROPERTIES: metadata-only commit removing
@@ -2608,16 +2323,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val meta = snap.metadata.copy(
       configuration = snap.metadata.configuration -- present)
     FeatureRequirements.validateEnabled(snap.protocol, meta)
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE",
-        Map("operation" -> operation,
-          "properties" -> present.mkString(",")), ictFor(snap)),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(snap.version + 1, lines,
-      retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta))
-    maybeAutoCheckpoint(committed, meta)
-    committed
+    commit(Some(snap), "ALTER TABLE",
+      Map("operation" -> operation, "properties" -> present.mkString(",")),
+      metadata = Some(meta))
   }
 
   /** ALTER TABLE ADD CONSTRAINT name CHECK (sql) — delta-spark
@@ -2953,15 +2661,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // V2 checkpoints require the v2Checkpoint table feature — upgrade
     // the protocol (preserving implied legacy features) on first use
     val pre = snapshot()
-    if (!pre.protocol.readerFeatures.exists(_.contains("v2Checkpoint"))) {
-      val up = TableFeatures.upgraded(pre.protocol,
-        Seq("v2Checkpoint"), Seq("v2Checkpoint"))
-      val uv = commitActions(pre.version + 1, Seq(
-        commitInfoLine("UPGRADE PROTOCOL", Map.empty),
-        JsonLog.writeAction(SingleAction(protocol = Some(up)))),
-        retryable = false)
-      maybeWriteChecksum(uv, Nil, Nil, newProto = Some(up))
-    }
+    if (!pre.protocol.readerFeatures.exists(_.contains("v2Checkpoint")))
+      commit(Some(pre), "UPGRADE PROTOCOL", protocol = Some(
+        TableFeatures.upgraded(pre.protocol,
+          Seq("v2Checkpoint"), Seq("v2Checkpoint"))))
     val snap = snapshot()
     val v = snap.version
     val uuid = UUID.randomUUID().toString
@@ -3108,32 +2811,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .map(a => key(a) -> a).toMap
     val wanted = new DeltaScan(target, None).collectAddFiles()
       .map(a => key(a) -> a).toMap
-    val removes = (current.keySet -- wanted.keySet).toSeq.sorted.map { k =>
-      val a = current(k)
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val adds = (wanted.keySet -- current.keySet).toSeq.sorted
-      .map(k => wanted(k).copy(dataChange = true))
-    val metaLine =
-      if (target.metadata.schemaString == snap.metadata.schemaString &&
-          target.metadata.configuration == snap.metadata.configuration) Nil
-      else Seq(JsonLog.writeAction(SingleAction(metaData =
-        Some(target.metadata))))
-    val lines =
-      Seq(commitInfoLine("RESTORE", Map("version" -> version.toString),
-        ictFor(snap))) ++ metaLine ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    val committed = commitActions(snap.version + 1, lines, retryable = false)
-    maybeWriteChecksum(committed, adds.map(_.size),
-      removes.map(_.size.getOrElse(0L)),
-      newMeta = if (metaLine.nonEmpty) Some(target.metadata) else None)
-    maybeAutoCheckpoint(committed,
-      if (metaLine.nonEmpty) target.metadata else snap.metadata)
-    committed
+    val sameMeta =
+      target.metadata.schemaString == snap.metadata.schemaString &&
+        target.metadata.configuration == snap.metadata.configuration
+    commit(Some(snap), "RESTORE", Map("version" -> version.toString),
+      metadata = if (sameMeta) None else Some(target.metadata),
+      removes = (current.keySet -- wanted.keySet).toSeq.sorted
+        .map(k => current(k).toRemove()),
+      adds = (wanted.keySet -- current.keySet).toSeq.sorted
+        .map(k => wanted(k).copy(dataChange = true)))
   }
 
   /** SHALLOW CLONE: a new table at `targetPath` whose version-0 commit
@@ -3175,30 +2861,13 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         a.path else srcUri + "/" + a.path
       a.copy(path = abs, deletionVector = dv, dataChange = true)
     }
-    val targetRoot = new Path(targetPath)
-    val tfs = Storage.fs(targetRoot, spark.sessionState.newHadoopConf())
-    val ts = System.currentTimeMillis()
-    val ictOn = snap.metadata.configuration
-      .get(DeltaTable.ICT_ENABLED_KEY).exists(_.equalsIgnoreCase("true"))
-    val meta = snap.metadata.copy(id = UUID.randomUUID().toString,
-      createdTime = Some(ts))
-    val lines = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        ts, "CLONE",
+    new DeltaTable(spark, targetPath, correlationId = correlationId)
+      .commit(None, "CLONE",
         Map("source" -> pathStr, "sourceVersion" -> snap.version.toString),
-        Some("graft-spark/0.1.0"),
-        inCommitTimestamp = if (ictOn) Some(ts) else None)))),
-      JsonLog.writeAction(SingleAction(protocol = Some(snap.protocol))),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta)))) ++
-      snap.domainMetadatas.filterNot(_.removed).map(d =>
-        JsonLog.writeAction(SingleAction(domainMetadata = Some(d)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    tfs.mkdirs(FileNames.logDir(targetRoot))
-    require(Storage.putIfAbsent(tfs,
-      FileNames.commitFile(FileNames.logDir(targetRoot), 0L),
-      lines.mkString("", "\n", "\n")),
-      s"clone target log already exists: $targetPath")
-    0L
+        protocol = Some(snap.protocol),
+        metadata = Some(snap.metadata.copy(id = UUID.randomUUID().toString,
+          createdTime = Some(now()))),
+        domains = snap.domainMetadatas.filterNot(_.removed), adds = adds)
   }
 
   // ---------------- vacuum ----------------
@@ -3407,29 +3076,13 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       if (snap.smallState && !forceWide) fsckMissingDriver(snap, rootUri)
       else fsckMissingDistributed(snap, rootUri)
     if (dryRun || missing.isEmpty) return missing.map(_.path)
-    val removes = missing.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("FSCK",
-        Map("numRemovedFiles" -> missing.size.toString),
-        ictAt(snap, cv - 1)) +:
-        removes.map(r =>
-          JsonLog.writeAction(SingleAction(remove = Some(r)))),
-      retryable = false, Nil,
-      // maintenance conflict shape: a concurrent APPEND's new files
-      // exist by construction (never "missing"), so it commutes;
-      // remove/remove overlap (someone else tombstoned the same file)
-      // still conflicts
-      Some(DeltaTable.ReadSet(snap, None,
-        missing.map(a => Storage.canonicalPathKey(a.path)).toSet,
-        maintenance = true)))
-    maybeWriteChecksum(committed, Nil,
-      missing.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
+    // maintenance conflict shape: a concurrent APPEND's new files exist
+    // by construction (never "missing"), so it commutes; remove/remove
+    // overlap (someone else tombstoned the same file) still conflicts
+    commit(Some(snap), "FSCK",
+      Map("numRemovedFiles" -> missing.size.toString),
+      removes = missing.map(_.toRemove()),
+      policy = DeltaTable.Reads(DeltaTable.ReadSet(None, maintenance = true)))
     missing.map(_.path)
   }
 
@@ -3995,18 +3648,74 @@ object DeltaTable {
     }
   }
 
-  /** Read footprint of a reads-based (DML) transaction, for commit
-    * conflict checks: the snapshot it planned against, the predicate
-    * it read under, and the canonical keys of the files it removes.
+  /** How a commit may treat a concurrent winner at its version — the
+    * rebase rule [[DeltaTable.commit]] applies after the typed
+    * protocol/metadata/txn checks. Commits carrying protocol, metadata
+    * or domain-metadata actions are always [[Strict]].
     */
+  private[delta] sealed trait ConflictPolicy
+  /** Blind append: rebases past any winner (under Serializable
+    * isolation, past any winner that removes no data).
+    */
+  private[delta] case object Blind extends ConflictPolicy
+  /** Reads-based (DML, maintenance): rebases only past a winner that
+    * removes none of our removed files and provably adds no row our
+    * read could have matched.
+    */
+  private[delta] final case class Reads(readSet: ReadSet)
+      extends ConflictPolicy
+  /** Never rebases: any winner is a conflict. */
+  private[delta] case object Strict extends ConflictPolicy
 
-  /** `maintenance`: the commit is a dataChange=false rewrite of
-    * exactly `removedKeys` — concurrent APPENDS are always disjoint
-    * (new files are never among those compacted), so the rebase check
-    * skips predicate pruning; remove/remove overlap still conflicts.
+  /** Read footprint of a reads-based transaction: the predicate it read
+    * under (None = anything could match). The files it removes come
+    * from the commit's own remove actions. `maintenance`: the commit is
+    * a dataChange=false rewrite of exactly the files it removes —
+    * concurrent APPENDS are always disjoint (new files are never among
+    * those compacted), so the rebase check skips predicate pruning;
+    * remove/remove overlap still conflicts.
     */
-  case class ReadSet(snap: Snapshot, predicateSql: Option[String],
-      removedKeys: Set[String], maintenance: Boolean = false)
+  private[delta] case class ReadSet(predicateSql: Option[String],
+      maintenance: Boolean = false)
+
+  private[delta] val ENGINE_INFO = "graft-spark/0.1.0"
+
+  /** Hive-style partition values of a table-relative file path
+    * (`k=v/.../file`): segments URI-decoded, values %XX-unescaped,
+    * `__HIVE_DEFAULT_PARTITION__` read as null.
+    */
+  private def hivePartitionValues(rel: String): Map[String, String] =
+    rel.split('/').dropRight(1).map(uriDecodeSegment)
+      .filter(_.contains('='))
+      .map { seg =>
+        val Array(k, v) = seg.split("=", 2)
+        k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
+              else unescapePathName(v))
+      }.toMap
+
+  /** URI-decode one path segment ('+' stays literal). */
+  private def uriDecodeSegment(s: String): String =
+    try java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
+    catch { case _: IllegalArgumentException => s }
+
+  /** Hive-style partition-dir unescaping (%XX only — '+' stays). */
+  private def unescapePathName(s: String): String = {
+    val b = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '%' && i + 3 <= s.length) {
+        try {
+          b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
+          i += 3
+        } catch { case _: NumberFormatException => b.append(c); i += 1 }
+      } else { b.append(c); i += 1 }
+    }
+    b.toString
+  }
+
+  private[delta] def ictEnabled(m: graft.delta.Metadata): Boolean =
+    m.configuration.get(ICT_ENABLED_KEY).exists(_.equalsIgnoreCase("true"))
 
   val ICT_ENABLED_KEY = "delta.enableInCommitTimestamps"
 
@@ -4239,39 +3948,17 @@ object DeltaTable {
     // validate_feature_requirements): a CREATE whose declared features
     // have unmet dependencies must fail here, not at first read
     FeatureRequirements.validateEnabled(protocol, meta)
-    val createTs = System.currentTimeMillis()
-    val lines = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        createTs, "CREATE TABLE",
-        Map("partitionBy" -> partitionColumns.mkString(",")),
-        Some("graft-spark/0.1.0"),
-        inCommitTimestamp = if (wantsIct) Some(createTs) else None,
-        correlationId = t.correlationId)))),
-      JsonLog.writeAction(SingleAction(protocol = Some(protocol))),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta)))) ++
-      (if (wantsRowTracking)
-        Seq(JsonLog.writeAction(SingleAction(domainMetadata = Some(
-          RowTracking.domainMetadataFor(
-            RowTracking.MISSING_HIGH_WATER_MARK)))))
-      else Nil) ++
-      (if (clusterBy.nonEmpty) {
+    t.commit(None, "CREATE TABLE",
+      Map("partitionBy" -> partitionColumns.mkString(",")),
+      protocol = Some(protocol), metadata = Some(meta),
+      domains =
+        (if (wantsRowTracking) Seq(RowTracking.domainMetadataFor(
+          RowTracking.MISSING_HIGH_WATER_MARK)) else Nil) ++
         // the domain records PHYSICAL column paths (clustering.rs)
-        val physPaths = clusterBy.map(c => Seq(ColumnMapping.physicalName(
-          finalSchema.fields.find(_.name == c).get)))
-        Seq(JsonLog.writeAction(SingleAction(domainMetadata = Some(
-          Clustering.domainFor(physPaths)))))
-      } else Nil)
-    val fs = Storage.fs(t.root, spark.sessionState.newHadoopConf())
-    fs.mkdirs(FileNames.logDir(t.root))
-    t.committer.commit(fs, FileNames.logDir(t.root), 0L,
-        lines.mkString("", "\n", "\n")) match {
-      case CommitResponse.Committed(_, _) => ()
-      case CommitResponse.Conflict(_) =>
-        throw new IllegalStateException(s"table already exists at $path")
-    }
-    Checksum.write(fs, FileNames.logDir(t.root), 0L,
-      Checksum.VersionChecksum(0L, 0L, protocol, meta,
-        Some(FileSizeHistogram.empty)))
+        (if (clusterBy.isEmpty) Nil
+         else Seq(Clustering.domainFor(clusterBy.map(c =>
+           Seq(ColumnMapping.physicalName(
+             finalSchema.fields.find(_.name == c).get)))))))
     t
   }
 
@@ -4319,23 +4006,6 @@ object DeltaTable {
       dataFields.toIndexedSeq ++ partitionSchema.fields)
     val dataSchema = StructType(dataFields.toIndexedSeq)
 
-    def uriDecodeSeg(s: String): String =
-      try java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
-      catch { case _: IllegalArgumentException => s }
-    def unescape(s: String): String = {
-      val b = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '%' && i + 3 <= s.length) {
-          try {
-            b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-            i += 3
-          } catch { case _: NumberFormatException => b.append(c); i += 1 }
-        } else { b.append(c); i += 1 }
-      }
-      b.toString
-    }
 
     val statsByPath = ParquetFooterStats.collect(spark,
       files.map(_.getPath.toString).toSeq, dataSchema, conf)
@@ -4343,13 +4013,7 @@ object DeltaTable {
     val adds = files.map { st =>
       val rel = st.getPath.toUri.getRawPath
         .stripPrefix(rootQ.toUri.getRawPath).stripPrefix("/")
-      val pv: Map[String, String] = rel.split('/').dropRight(1)
-        .map(uriDecodeSeg).filter(_.contains('='))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                else unescape(v))
-        }.toMap
+      val pv = hivePartitionValues(rel)
       AddFile(
         path = rel,
         partitionValues = partCols.map(c => c -> pv.getOrElse(c, null))
@@ -4360,33 +4024,19 @@ object DeltaTable {
         stats = Some(statsByPath(st.getPath.toString)))
     }
 
-    val ts = System.currentTimeMillis()
-    val meta = graft.delta.Metadata(
-      id = UUID.randomUUID().toString,
-      name = None, description = None, format = Format(),
-      schemaString = schema.json,
-      partitionColumns = partCols,
-      configuration = Map.empty,
-      createdTime = Some(ts))
-    val protocol = Protocol(1, 2)
-    val lines = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        ts, "CONVERT",
-        Map("numFiles" -> adds.size.toString,
-          "partitionBy" -> partCols.mkString(",")),
-        Some("graft-spark/0.1.0"))))),
-      JsonLog.writeAction(SingleAction(protocol = Some(protocol))),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    fs.mkdirs(FileNames.logDir(root))
-    require(Storage.putIfAbsent(fs,
-      FileNames.commitFile(FileNames.logDir(root), 0L),
-      lines.mkString("", "\n", "\n")),
-      s"concurrent CONVERT/CREATE at $path")
-    Checksum.write(fs, FileNames.logDir(root), 0L,
-      Checksum.VersionChecksum(adds.map(_.size).sum, adds.size.toLong,
-        protocol, meta,
-        Some(FileSizeHistogram.of(adds.map(_.size)))))
-    new DeltaTable(spark, path, None)
+    val t = new DeltaTable(spark, path, None)
+    t.commit(None, "CONVERT",
+      Map("numFiles" -> adds.size.toString,
+        "partitionBy" -> partCols.mkString(",")),
+      protocol = Some(Protocol(1, 2)),
+      metadata = Some(graft.delta.Metadata(
+        id = UUID.randomUUID().toString,
+        name = None, description = None, format = Format(),
+        schemaString = schema.json,
+        partitionColumns = partCols,
+        configuration = Map.empty,
+        createdTime = Some(System.currentTimeMillis()))),
+      adds = adds)
+    t
   }
 }

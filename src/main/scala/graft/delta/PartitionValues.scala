@@ -5,7 +5,7 @@ import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{element_at, expr, lit, nullif}
 import org.apache.spark.sql.types._
 
 /** Partition-value string (de)serialization per the Delta protocol
@@ -52,24 +52,22 @@ object PartitionValues {
     }
   }
 
-  /** SQL expression string that casts partition-string map entries to the
-    * typed column, with the protocol empty-string→NULL rule. `mapExpr` is
-    * a SQL expression yielding MAP<STRING,STRING>.
+  /** Cast partition-string map entries to the typed column, with the
+    * protocol empty-string→NULL rule. `mapExpr` is a SQL expression
+    * yielding MAP<STRING,STRING>.
     */
-  def castExpr(mapExpr: String, name: String, dt: DataType): Column = {
-    val raw = s"element_at($mapExpr, '${name.replace("'", "''")}')"
-    val guarded = dt match {
+  def castExpr(mapExpr: String, name: String, dt: DataType): Column =
+    castValue(element_at(expr(mapExpr), name), dt)
+
+  /** Cast one partition-string value to `dt` — the rule [[castExpr]]
+    * applies, for callers holding the raw string (or a literal).
+    * Partition timestamps use 'yyyy-MM-dd HH:mm:ss[.ffffff]'.
+    */
+  private[delta] def castValue(raw: Column, dt: DataType): Column =
+    (dt match {
       case StringType | BinaryType => raw
-      case _ => s"nullif($raw, '')"
-    }
-    val castSql = dt match {
-      case TimestampType | TimestampNTZType =>
-        // partition timestamps use 'yyyy-MM-dd HH:mm:ss[.ffffff]'
-        s"cast($guarded as ${dt.sql})"
-      case _ => s"cast($guarded as ${dt.sql})"
-    }
-    expr(castSql)
-  }
+      case _ => nullif(raw, lit(""))
+    }).cast(dt)
 
   private def parseTimestamp(s: String): Timestamp =
     if (s.contains('T'))

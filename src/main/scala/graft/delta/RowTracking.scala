@@ -50,22 +50,26 @@ object RowTracking {
     DomainMetadata(DOMAIN, s"""{"rowIdHighWaterMark":$hwm}""",
       removed = false)
 
-  /** Assign baseRowId/defaultRowCommitVersion to fresh adds, advancing
-    * the high-water mark by each file's numRecords (from its stats).
-    * Returns (annotated adds, new high-water mark).
+  /** Assign baseRowId/defaultRowCommitVersion to the adds that carry
+    * none yet, advancing the high-water mark by each such file's
+    * numRecords (from its stats); adds that already own a range (DV
+    * swaps, restored files) keep it. Returns (annotated adds, new
+    * high-water mark).
     */
   def assign(adds: Seq[AddFile], hwm: Long,
       commitVersion: Long): (Seq[AddFile], Long) = {
     var cursor = hwm
-    val out = adds.map { a =>
-      val n = a.stats
-        .map(s => JsonLog.parseLine(s).get("numRecords").asLong)
-        .getOrElse(throw new IllegalStateException(
-          s"row tracking requires numRecords stats on ${a.path}"))
-      val base = cursor + 1
-      cursor += n
-      a.copy(baseRowId = Some(base),
-        defaultRowCommitVersion = Some(commitVersion))
+    val out = adds.map {
+      case a if a.baseRowId.isDefined => a
+      case a =>
+        val n = a.stats
+          .map(s => JsonLog.parseLine(s).get("numRecords").asLong)
+          .getOrElse(throw new IllegalStateException(
+            s"row tracking requires numRecords stats on ${a.path}"))
+        val base = cursor + 1
+        cursor += n
+        a.copy(baseRowId = Some(base),
+          defaultRowCommitVersion = Some(commitVersion))
     }
     (out, cursor)
   }

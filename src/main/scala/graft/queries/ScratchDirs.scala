@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** In-JVM registry of the per-invocation scratch table dirs the query
   * closures create under target/tmp. Bench/Verify drain it right
   * after each row's execution completes (outside any timed region) so
@@ -22,14 +26,46 @@ private[graft] object ScratchDirs {
   private[graft] def dropRegistered(): Unit = {
     var s = created.poll()
     while (s != null) {
-      try {
-        val p = java.nio.file.Paths.get(s)
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      } catch { case _: Throwable => () }
+      deleteTree(Paths.get(s))
       s = created.poll()
     }
   }
+
+  /** Startup sweep of `root`: delete the children nothing has written
+    * to for an hour (earlier sessions' leftovers). Staleness is the
+    * NEWEST mtime anywhere under a child — a long-lived dir whose top
+    * level is old but whose files are fresh is still in use. Fixture
+    * bases, lock files and the shared warehouse/golden dirs are never
+    * touched. Best-effort: a failure skips that child.
+    */
+  private[graft] def sweepStale(root: Path): Unit = {
+    val cutoff = System.currentTimeMillis() - 3600L * 1000
+    def protectedName(n: String): Boolean =
+      n.contains("-base-") || n.endsWith(".lock") ||
+        n == "gd-warehouse" || n == "golden"
+    def newestMtime(p: Path): Long = {
+      val s = Files.walk(p)
+      try s.iterator().asScala
+        .map(q => Files.getLastModifiedTime(q).toMillis).max
+      finally s.close()
+    }
+    val children =
+      try {
+        val s = Files.list(root)
+        try s.iterator().asScala.toList finally s.close()
+      } catch { case _: Throwable => Nil }
+    children
+      .filterNot(p => protectedName(p.getFileName.toString))
+      .filter(p =>
+        try newestMtime(p) < cutoff catch { case _: Throwable => false })
+      .foreach(deleteTree)
+  }
+
+  private def deleteTree(p: Path): Unit =
+    try {
+      if (Files.exists(p))
+        Files.walk(p)
+          .sorted(java.util.Comparator.reverseOrder())
+          .forEach(q => Files.deleteIfExists(q))
+    } catch { case _: Throwable => () }
 }

@@ -133,12 +133,10 @@ class CheckpointV2Spec extends AnyFunSuite {
     t.append(src.filter($"l_quantity" >= 4))
     t.deleteWhere("l_quantity < 4") // fresh tombstones
     // hand-craft an EXPIRED tombstone for a fictional path
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-        "ghost.parquet",
-        Some(System.currentTimeMillis() - 3L * 86400000),
-        dataChange = false))))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "FSCK", removes = Seq(RemoveFile(
+      "ghost.parquet",
+      Some(System.currentTimeMillis() - 3L * 86400000),
+      dataChange = false)))
     t.checkpoint()
     val ckpt = spark.read.schema(LogSchema.checkpoint).parquet(
       FileNames.classicCheckpointFile(
@@ -158,10 +156,8 @@ class CheckpointV2Spec extends AnyFunSuite {
     t.append(src)
     // tombstone with NO deletionTimestamp (some engines omit the field);
     // keeping it forever would grow checkpoints without bound
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-        "ghost-null-ts.parquet", None, dataChange = false))))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "FSCK", removes = Seq(RemoveFile(
+      "ghost-null-ts.parquet", None, dataChange = false)))
     t.checkpoint()
     val ckpt = spark.read.schema(LogSchema.checkpoint).parquet(
       FileNames.classicCheckpointFile(

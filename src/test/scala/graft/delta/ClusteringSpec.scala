@@ -159,6 +159,30 @@ class ClusteringSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.autoCompact.minNumFiles")
   }
 
+  test("auto-compact fires on column-mapped tables and on backslash, " +
+      "date and timestamp partition values") {
+    import java.sql.{Date, Timestamp}
+    val cases = Seq(
+      ("cm", Seq((0L, "a")).toDF("k", "p"),
+        Map(ColumnMapping.MODE_KEY -> "name")),
+      ("bs", Seq((0L, "a\\b")).toDF("k", "p"), Map.empty[String, String]),
+      ("date", Seq((0L, Date.valueOf("2024-01-02"))).toDF("k", "p"),
+        Map.empty[String, String]),
+      ("ts", Seq((0L, Timestamp.valueOf("2024-01-02 03:04:05.123456")))
+        .toDF("k", "p"), Map.empty[String, String]))
+    spark.conf.set("spark.graft.autoCompact.minNumFiles", "4")
+    try cases.foreach { case (name, row, conf) =>
+      val dir = TestSpark.tmpDir(s"autocompact-$name")
+      DeltaTable.create(spark, dir, row.schema, Seq("p"),
+        configuration = conf + (DeltaTable.AUTO_COMPACT_KEY -> "true"))
+      val t = DeltaTable.forPath(spark, dir)
+      (1 to 4).foreach(_ => t.append(row))
+      val n = t.scan(None).collectAddFiles().size
+      assert(n == 1, s"$name: the 4th small file should compact, got $n")
+      assert(t.toDF.count() == 4)
+    } finally spark.conf.unset("spark.graft.autoCompact.minNumFiles")
+  }
+
   test("auto-compact candidate scan scopes to touched partitions") {
     val dir = TestSpark.tmpDir("autocompact-scope")
     val src0 = Seq((0L, "a")).toDF("k", "p")

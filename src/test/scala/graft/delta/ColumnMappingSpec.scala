@@ -103,11 +103,9 @@ class ColumnMappingSpec extends AnyFunSuite {
     val t = DeltaTable.forPath(spark, dir)
     t.append(src)
     // hand-craft a protocol claiming an unimplemented reader feature
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(protocol = Some(Protocol(
-        3, 7, Some(Seq("someFutureFeature")),
-        Some(Seq("someFutureFeature"))))))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "UPGRADE PROTOCOL", protocol = Some(
+      Protocol(3, 7, Some(Seq("someFutureFeature")),
+        Some(Seq("someFutureFeature")))))
     intercept[IllegalArgumentException] {
       Snapshot.forTable(spark, dir)
     }
@@ -122,11 +120,9 @@ class ColumnMappingSpec extends AnyFunSuite {
     t.append(src)
     // some existing tables carry the non-protocol alias in their
     // feature arrays; both reads and writes must accept it
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(protocol = Some(Protocol(
-        3, 7, Some(Seq("timestampWithoutTimezone")),
-        Some(Seq("timestampWithoutTimezone"))))))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "UPGRADE PROTOCOL", protocol = Some(
+      Protocol(3, 7, Some(Seq("timestampWithoutTimezone")),
+        Some(Seq("timestampWithoutTimezone")))))
     val t2 = DeltaTable.forPath(spark, dir)
     assert(t2.toDF.count() == 2)
     t2.append(Seq((3L, "c")).toDF("id", "s"))

@@ -45,9 +45,8 @@ class ConflictSpec extends AnyFunSuite {
     DeltaTable.create(spark, dir, src(1, 1).schema)
     val t = DeltaTable.forPath(spark, dir)
     val stale = t.snapshot()
-    t.commitActions(1L, Seq(JsonLog.writeAction(SingleAction(
-      protocol = Some(TableFeatures.upgraded(
-        stale.protocol, Nil, Seq("domainMetadata")))))), retryable = false)
+    t.commit(Some(stale), "UPGRADE PROTOCOL", protocol = Some(
+      TableFeatures.upgraded(stale.protocol, Nil, Seq("domainMetadata"))))
     intercept[ProtocolChangedException] { t.appendFrom(stale, src(1, 5)) }
   }
 
@@ -74,17 +73,16 @@ class ConflictSpec extends AnyFunSuite {
     DeltaTable.create(spark, dir, src(1, 1).schema)
     val t = DeltaTable.forPath(spark, dir)
     t.append(src(1, 10))
+    val snap1 = t.snapshot()
     // occupy the version the reads-based commit will try
     val add = t.scan(None).collectAddFiles().head
-    t.commitActions(2L, Seq(JsonLog.writeAction(SingleAction(
-      add = Some(add.copy(path = add.path + ".dup"))))), retryable = false)
+    t.commit(Some(snap1), "WRITE",
+      adds = Seq(add.copy(path = add.path + ".dup")))
     // deleteWhere computes against v2 now; fake staleness by committing
     // another version under it through the conflict path directly
     val ex = intercept[ConcurrentWriteException] {
-      t.commitActions(2L, (_: Long) => Seq(
-        JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-          add.path, Some(System.currentTimeMillis()),
-          dataChange = true))))), retryable = false, Nil)
+      t.commit(Some(snap1), "DELETE", removes = Seq(RemoveFile(
+        add.path, Some(System.currentTimeMillis()), dataChange = true)))
     }
     assert(!ex.isInstanceOf[MetadataChangedException])
   }
@@ -99,17 +97,46 @@ class ConflictSpec extends AnyFunSuite {
     t.append(src(100, 110))          // v2 lands first: k stats 100..110
     // our DELETE (k < 50) planned against v1 tries v2 — the winner's
     // stats prove no added row can match, so it must land at v3
-    val v = t.commitActions(2L, (_: Long) => Seq(
-      JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-        victim.path, Some(System.currentTimeMillis()),
-        dataChange = true))))),
-      retryable = false, Nil,
-      Some(DeltaTable.ReadSet(snap, Some("k < 50"),
-        Set(Storage.canonicalPathKey(victim.path)))))
+    val v = t.commit(Some(snap), "DELETE", removes = Seq(RemoveFile(
+        victim.path, Some(System.currentTimeMillis()), dataChange = true)),
+      policy = DeltaTable.Reads(DeltaTable.ReadSet(Some("k < 50"))))
     assert(v == 3L)
     // the delete landed after the disjoint append: only 100..110 remain
     assert(t.toDF.select("k").as[Long].collect().toSet ==
       (100L to 110L).toSet)
+  }
+
+  test("row-tracking DELETE never rebases with stale row ids") {
+    val dir = TestSpark.tmpDir("cf-rt")
+    DeltaTable.create(spark, dir, src(1, 1).schema,
+      configuration = Map(RowTracking.ENABLED_KEY -> "true"))
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(src(1, 10).repartition(1)) // v1: row ids 0..9
+    // a committer that lets a provably-disjoint append (k 100..109, row
+    // ids 10..19) win the version the DELETE planned for, once
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val racing = new Committer {
+      def commit(fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
+          version: Long, content: String): CommitResponse = {
+        if (raced.compareAndSet(false, true))
+          t.append(src(100, 109).repartition(1))
+        FileSystemCommitter.commit(fs, logDir, version, content)
+      }
+      def isCatalogCommitter: Boolean = false
+      def publish(fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
+          commits: Seq[CatalogCommit]): Unit =
+        FileSystemCommitter.publish(fs, logDir, commits)
+    }
+    // the DELETE's new file took ids from the v1 high-water mark: it
+    // must fail rather than land past the winner with ids it owns
+    intercept[ConcurrentWriteException] {
+      DeltaTable.forPath(spark, dir, racing).deleteWhere("k < 5")
+    }
+    assert(raced.get)
+    val ids = t.scan(None).toDFWithRowIds.select("_row_id").as[Long]
+      .collect()
+    assert(ids.length == 20 && ids.distinct.length == 20, ids.sorted.toSeq)
+    assert(RowTracking.highWaterMark(t.snapshot()) == 19L)
   }
 
   test("DELETE racing an overlapping append surfaces " +
@@ -122,13 +149,9 @@ class ConflictSpec extends AnyFunSuite {
     val victim = t.scan(None).collectAddFiles().head
     t.append(src(20, 60)) // overlaps predicate k < 50
     intercept[ConcurrentAppendException] {
-      t.commitActions(2L, (_: Long) => Seq(
-        JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-          victim.path, Some(System.currentTimeMillis()),
-          dataChange = true))))),
-        retryable = false, Nil,
-        Some(DeltaTable.ReadSet(snap, Some("k < 50"),
-          Set(Storage.canonicalPathKey(victim.path)))))
+      t.commit(Some(snap), "DELETE", removes = Seq(RemoveFile(
+          victim.path, Some(System.currentTimeMillis()), dataChange = true)),
+        policy = DeltaTable.Reads(DeltaTable.ReadSet(Some("k < 50"))))
     }
   }
 
@@ -142,13 +165,9 @@ class ConflictSpec extends AnyFunSuite {
     val victim = t.scan(None).collectAddFiles().head
     t.deleteWhere("k <= 10") // winner removes the same file
     intercept[ConcurrentDeleteDeleteException] {
-      t.commitActions(2L, (_: Long) => Seq(
-        JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-          victim.path, Some(System.currentTimeMillis()),
-          dataChange = true))))),
-        retryable = false, Nil,
-        Some(DeltaTable.ReadSet(snap, Some("k < 5"),
-          Set(Storage.canonicalPathKey(victim.path)))))
+      t.commit(Some(snap), "DELETE", removes = Seq(RemoveFile(
+          victim.path, Some(System.currentTimeMillis()), dataChange = true)),
+        policy = DeltaTable.Reads(DeltaTable.ReadSet(Some("k < 5"))))
     }
   }
 

@@ -99,18 +99,14 @@ class DeltaTableSpec extends AnyFunSuite {
     val files = t.scan(None).collectAddFiles()
     // hand-craft a commit that re-adds the same path (newer wins, no dup)
     val a = files.head.copy(dataChange = false)
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(add = Some(a)))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "WRITE", adds = Seq(a))
     assert(t.scan(None).collectAddFiles().size == files.size)
     assert(t.toDF.count() == src.count())
 
     // remove the file: reads must drop its rows
     val r = RemoveFile(a.path, Some(System.currentTimeMillis()),
       dataChange = true)
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(remove = Some(r)))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "DELETE", removes = Seq(r))
     assert(t.scan(None).collectAddFiles().size == files.size - 1)
   }
 
@@ -175,9 +171,7 @@ class DeltaTableSpec extends AnyFunSuite {
     val t = DeltaTable.forPath(spark, dir)
     t.append(src)
     // simulate a racing writer taking version 2
-    t.commitActions(2L, Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        0L, "NOOP"))))), retryable = false)
+    t.commit(Some(t.snapshot(Some(1L))), "NOOP")
     // blind append retries into version 3
     val v = t.append(src)
     assert(v == 3L)
@@ -413,5 +407,15 @@ class DeltaTableSpec extends AnyFunSuite {
     assert(!t.snapshot(Some(3L)).builtAsLatest)
     // refresh advances to latest
     assert(Snapshot.refresh(t.snapshot(Some(2L))).builtAsLatest)
+
+    // a SHALLOW CLONE's version 0 goes through the same commit: it
+    // carries the handle's correlation id and writes its .crc
+    val cdir = TestSpark.tmpDir("corr-clone")
+    t.withCorrelationId("req-42").cloneShallow(cdir)
+    assert(DeltaTable.forPath(spark, cdir).historyDetail().map(_._4) ==
+      Seq(Some("req-42")))
+    val clog = FileNames.logDir(new org.apache.hadoop.fs.Path(cdir))
+    assert(Storage.fs(clog, spark.sessionState.newHadoopConf())
+      .exists(Checksum.path(clog, 0L)), "clone must write its v0 .crc")
   }
 }

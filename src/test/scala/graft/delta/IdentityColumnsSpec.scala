@@ -105,10 +105,9 @@ class IdentityColumnsSpec extends AnyFunSuite {
     val schema = StructType(Seq(idField(1, 1), StructField("s", StringType)))
     DeltaTable.create(spark, dir, schema)
     val t = DeltaTable.forPath(spark, dir)
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(protocol = Some(
-        TableFeatures.upgraded(t.snapshot().protocol, Nil,
-          Seq("identityColumns")))))), retryable = false)
+    t.commit(Some(t.snapshot()), "UPGRADE PROTOCOL", protocol = Some(
+      TableFeatures.upgraded(t.snapshot().protocol, Nil,
+        Seq("identityColumns"))))
     t.append(Seq("a").toDF("s")) // would previously throw in writerGate
     assert(t.toDF.count() == 1)
   }

@@ -107,6 +107,23 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(icts.sliding(2).forall { case Seq(x, y) => x < y; case _ => true })
     assert(t.versionAtTimestamp(icts.last) == 3L)
     assert(t.versionAtTimestamp(icts(2)) == 2L)
+    // checkpointV2's protocol-upgrade commit is a commit like any other:
+    // it must carry an ICT too, or time travel falls back to its mtime
+    // inside the ICT régime
+    t.checkpointV2() // v4: UPGRADE PROTOCOL
+    t.append(a)      // v5
+    val logDir = FileNames.logDir(new org.apache.hadoop.fs.Path(dir))
+    val fs = Storage.fs(logDir, spark.sessionState.newHadoopConf())
+    val written = (0L to t.snapshot().version).map(v =>
+      Storage.readLines(fs, FileNames.commitFile(logDir, v)).iterator
+        .map(JsonLog.parseLine)
+        .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
+        .flatMap(ci => Option(ci.get("inCommitTimestamp"))
+          .filterNot(_.isNull).map(_.asLong))
+        .nextOption())
+    assert(written.size == 6 && written.forall(_.isDefined), written)
+    assert(written.flatten.sliding(2).forall {
+      case Seq(x, y) => x < y; case _ => true }, written)
   }
   test("overwrite assigns fresh row ids and advances the HWM " +
       "(Complete-mode sink parity with append)") {

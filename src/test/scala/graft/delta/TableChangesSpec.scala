@@ -171,9 +171,9 @@ class TableChangesSpec extends AnyFunSuite {
     // in-range schemas then don't read under the new end schema
     val dropped = org.apache.spark.sql.types.StructType(
       t.snapshot().schema.fields.filterNot(_.name == "extra"))
-    t.commitActions(4L, Seq(JsonLog.writeAction(SingleAction(
-      metaData = Some(t.snapshot().metadata.copy(
-        schemaString = dropped.json))))), retryable = false)
+    t.commit(Some(t.snapshot(Some(3L))), "ALTER TABLE",
+      metadata = Some(t.snapshot().metadata.copy(
+        schemaString = dropped.json)))
     val ex = intercept[IllegalArgumentException] {
       TableChanges.read(spark, dir, 1, Some(4))
     }

@@ -186,14 +186,10 @@ class TablePropertiesSpec extends AnyFunSuite {
     // one stale marker (lastUpdated two hours ago), one fresh, one
     // with no timestamp (never expires — reference is_expired contract)
     val now = System.currentTimeMillis()
-    t.commitActions(v + 1, Seq(
-      JsonLog.writeAction(SingleAction(txn = Some(
-        SetTransaction("stale-app", 3L, Some(now - 7200000L))))),
-      JsonLog.writeAction(SingleAction(txn = Some(
-        SetTransaction("fresh-app", 4L, Some(now))))),
-      JsonLog.writeAction(SingleAction(txn = Some(
-        SetTransaction("timeless-app", 5L, None))))),
-      retryable = false)
+    t.commit(Some(t.snapshot(Some(v))), "WRITE", txns = Seq(
+      SetTransaction("stale-app", 3L, Some(now - 7200000L)),
+      SetTransaction("fresh-app", 4L, Some(now)),
+      SetTransaction("timeless-app", 5L, None)))
     t.checkpoint()
     val apps = DeltaTable.forPath(spark, dir).snapshot()
       .setTransactions.map(_.appId).toSet
@@ -209,24 +205,28 @@ class TablePropertiesSpec extends AnyFunSuite {
     t.append(df)
     t.deleteWhere("k <= 10") // the winner: removes with dataChange=true
     val v = t.snapshot().version // occupied version
-    def blindLines(cv: Long): Seq[String] = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        System.currentTimeMillis(), "WRITE")))))
+    // a blind commit planned against the version before `at`; the
+    // isolation level comes from the read snapshot's metadata
+    def blindFrom(at: Long, serializable: Boolean): Long = {
+      val s = t.snapshot(Some(at - 1))
+      val m = if (!serializable) s.metadata else s.metadata.copy(
+        configuration = s.metadata.configuration +
+          (TableProperties.ISOLATION_LEVEL -> "Serializable"))
+      t.commit(Some(new Snapshot(spark, s.tableRoot, s.segment,
+        s.protocol, m)), "WRITE", policy = DeltaTable.Blind)
+    }
     // WriteSerializable (default): blind commit rebases past it
-    val committed = t.commitActions(v, blindLines _, retryable = true,
-      txnAppIds = Nil)
+    val committed = blindFrom(v, serializable = false)
     assert(committed == v + 1)
     // Serializable: the same rebase is refused
     val e = intercept[ConcurrentWriteException] {
-      t.commitActions(v, blindLines _, retryable = true,
-        txnAppIds = Nil, serializable = true)
+      blindFrom(v, serializable = true)
     }
     assert(e.getMessage.contains("serializable isolation"))
     // but rebasing past a pure append stays legal under Serializable
     val v2 = t.snapshot().version
     t.append(df.limit(5)) // occupy v2+1 with adds only
-    val c2 = t.commitActions(v2 + 1, blindLines _, retryable = true,
-      txnAppIds = Nil, serializable = true)
+    val c2 = blindFrom(v2 + 1, serializable = true)
     assert(c2 == v2 + 2)
   }
 

@@ -29,10 +29,8 @@ class WriterGateSpec extends AnyFunSuite {
     DeltaTable.create(spark, dir, src.schema)
     val t = DeltaTable.forPath(spark, dir)
     t.append(src)
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(protocol = Some(Protocol(
-        1, 7, None, Some(Seq("someWriterOnlyFeature"))))))),
-      retryable = false)
+    t.commit(Some(t.snapshot()), "UPGRADE PROTOCOL", protocol = Some(
+      Protocol(1, 7, None, Some(Seq("someWriterOnlyFeature")))))
     assert(t.toDF.count() == 1) // reads unaffected
     intercept[IllegalArgumentException] { t.append(src) }
   }
